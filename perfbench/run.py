@@ -1,13 +1,13 @@
 """Benchmark for the KG engine: one closed-loop workload per invocation.
 
-    python3 perfbench/run.py --workload extract --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload extract --seed 1 --seconds 10 --trace 0
 
-Run from the repository root.  The process starts one Spark session
-at ``local[<usable cores>]``, stages the workload's seeded inputs (three
-times; the median counts toward ``setup_s``), runs the untimed warm-up, then
-repeats the operation for ``--seconds`` seconds (at least once), checks the
-last operation's outputs against their DuckDB twins, and prints one JSON
-object as the last line of stdout.
+Run from the repository root.  The process starts one Spark session at
+``local[<half the usable cores>]``, stages the workload's seeded inputs
+(three times; the median counts toward ``setup_s``), runs the untimed
+warm-up, then repeats the operation for ``--seconds`` seconds (at least
+once), checks the last operation's outputs against their DuckDB twins, and
+prints one JSON object as the last line of stdout.
 
 ``--trace 1`` runs the traced layer pass instead (see ``layers.py``) and
 prints the per-layer metrics; the spans are written as JSON lines under
@@ -149,9 +149,19 @@ def metrics_of(values: dict) -> dict:
     return {k: {"value": v, "unit": unit_of(k)} for k, v in values.items()}
 
 
+def task_slots() -> int:
+    """Spark task slots: half the usable cores.  Each task of an Arrow UDF
+    stage keeps a JVM thread and a Python worker busy, so this many slots
+    keep about one busy thread per core.  With a slot per core the timings
+    follow whatever else the host runs: two busy-loop processes beside the
+    benchmark slowed an ``extract`` operation by 50% at four slots on four
+    cores, and by 10% at two."""
+    return max(1, len(os.sched_getaffinity(0)) // 2)
+
+
 def twin_digests(twins: dict, work: str, threads: int) -> dict:
-    """DuckDB digest of every twin; needs only the key range, so it runs on
-    half the cores while the Spark session starts."""
+    """DuckDB digest of every twin; needs only the key range, so it runs
+    while the Spark session starts and warms up."""
     import duckdb
 
     from digest import duckdb_digest
@@ -168,11 +178,11 @@ def twin_digests(twins: dict, work: str, threads: int) -> dict:
 def run(args, work: str) -> dict:
     from workloads import WORKLOADS, key_range
 
-    cores = len(os.sched_getaffinity(0))
+    cores = task_slots()
     cls = WORKLOADS[args.workload]
     with concurrent.futures.ThreadPoolExecutor(1) as pool:
         twins = pool.submit(
-            twin_digests, cls.twins(*key_range(args.seed, cls.turns)), work, max(1, cores // 2)
+            twin_digests, cls.twins(*key_range(args.seed, cls.turns)), work, cores
         )
         t0 = time.perf_counter()
         spark = start_session(work, cores)
@@ -202,6 +212,8 @@ def measure(spark, args, work: str, cores: int, start_s: float, twins) -> dict:
         wl.op(dirs.next(), off)
     warm_s = time.perf_counter() - a
     setup_s = start_s + statistics.median(stage_walls) + warm_s
+    # nothing else runs while the operations are timed
+    want = twins.result()
 
     walls: list[float] = []
     mismatches: list[str] = []
@@ -225,7 +237,6 @@ def measure(spark, args, work: str, cores: int, start_s: float, twins) -> dict:
                 break
 
     t_check = time.perf_counter()
-    want = twins.result()
     for what, df in wl.outputs().items():
         got = spark_digest(df)
         if got != want[what]:

@@ -127,7 +127,6 @@ class Extract(Workload):
 
     name = "extract"
     turns = EXTRACT_TURNS
-    warm_ops = 2
 
     @staticmethod
     def twins(lo: int, hi: int) -> dict[str, str]:
