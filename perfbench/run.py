@@ -5,8 +5,8 @@
 Run from the repository root.  The process starts one Spark session at
 ``local[<half the usable cores>]``, stages the workload's seeded inputs
 (three times; the median counts toward ``setup_s``), runs the untimed
-warm-up, then repeats the operation for ``--seconds`` seconds (at least
-once), checks the last operation's outputs against their DuckDB twins, and
+warm-up, then repeats the operation for ``--seconds`` seconds (and at least
+the workload's ``min_ops`` times), checks the last operation's outputs against their DuckDB twins, and
 prints one JSON object as the last line of stdout.
 
 ``--trace 1`` runs the traced layer pass instead (see ``layers.py``) and
@@ -233,7 +233,7 @@ def measure(spark, args, work: str, cores: int, start_s: float, twins) -> dict:
         deadline = time.perf_counter() + args.seconds
         while True:
             walls.append(wl.op(dirs.next(), off))
-            if time.perf_counter() >= deadline:
+            if time.perf_counter() >= deadline and len(walls) >= wl.min_ops:
                 break
 
     t_check = time.perf_counter()

@@ -115,6 +115,8 @@ class Workload:
     # untimed warm-up operations: the first operation in a session pays class
     # loading, code generation and Python worker start-up
     warm_ops = 1
+    # timed operations in every run, however long they take
+    min_ops = 1
 
     def __init__(self, spark, seed: int, cores: int):
         self.spark, self.cores = spark, cores
@@ -155,6 +157,10 @@ class Canon(Workload):
 
     name = "canon"
     turns = CANON_TURNS
+    # the first operation after the warm-up can still run up to 3 s slower
+    # than the next, so every run times two: a run that timed one would not
+    # compare with one that timed two
+    min_ops = 2
 
     @staticmethod
     def twins(lo: int, hi: int) -> dict[str, str]:
