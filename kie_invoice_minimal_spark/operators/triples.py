@@ -2,9 +2,12 @@
 
 The reference's ``postprocess_write_info`` (``backend/kie/kie_utils.py:314-340``)
 builds, per document and per non-OTHER label, the ' '-join of all member
-texts in index order.  Here that is one grouped aggregation with a
-deterministic in-group sort, emitting the ``triples`` table
-``(subj, pred, obj, conv_id)``; the writer partitions by
+texts in index order.  Here that fold emits the ``triples`` table
+``(subj, pred, obj, conv_id)`` in two forms with one contract:
+:func:`materialize_triples`, a grouped aggregation with a deterministic
+in-group sort over any mentions table, and :func:`fold_triples_batch`, the
+same fold over one Arrow batch that holds whole conversations (the
+flagship's Arrow pass, ``plans/pipeline.py``).  The writer partitions by
 ``(pred, subj_bucket)`` with an explicit salt column for hot subjects
 (north rule: skew handled explicitly, not left to AQE alone).
 
@@ -17,37 +20,66 @@ partition so no single task owns a mega-partition.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rules import OTHER
 
+TRIPLES_SCHEMA_DDL = "subj string, pred string, obj string, conv_id string"
 SUBJ_BUCKETS = 64
 SALT_BUCKETS = 8
 
 
-def materialize_triples(mentions: DataFrame, subj_col: str = "conv_id") -> DataFrame:
-    """(subj, pred, obj, conv_id): obj = surfaces ' '-joined in stable
-    (turn_idx, pos) order.  One shuffle (the groupBy); the sort is the
-    array_sort of collected structs, not a global sort."""
+def materialize_triples(mentions: DataFrame) -> DataFrame:
+    """(subj, pred, obj, conv_id) with subj = conv_id: obj = surfaces
+    ' '-joined in stable (turn_idx, pos, surface) order.  One shuffle (the
+    groupBy); the sort is the sort_array of collected structs, not a global
+    sort."""
     return (
         mentions.filter(F.col("mention_type") != OTHER)
         # shuffle only what the aggregation needs — span offsets stay behind
-        .select(subj_col, "mention_type", "turn_idx", "pos", "surface")
-        .groupBy(F.col(subj_col).alias("subj"), F.col("mention_type").alias("pred"))
+        .select("conv_id", "mention_type", "turn_idx", "pos", "surface")
+        .groupBy(F.col("conv_id").alias("subj"), F.col("mention_type").alias("pred"))
         .agg(
             F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("turn_idx", "pos", "surface"))
-                    ),
-                    lambda m: m["surface"],
-                ),
+                F.sort_array(
+                    F.collect_list(F.struct("turn_idx", "pos", "surface"))
+                ).getField("surface"),
                 " ",
             ).alias("obj"),
-            F.first(subj_col).alias("conv_id"),
         )
-        .select("subj", "pred", "obj", "conv_id")
+        .select("subj", "pred", "obj", F.col("subj").alias("conv_id"))
+    )
+
+
+def fold_triples_batch(mentions: pa.RecordBatch) -> pa.Table:
+    """:func:`materialize_triples` over one in-memory batch of mentions that
+    holds every mention of each conversation it touches, none of them OTHER
+    (the detector's output): the same (subj, pred, obj, conv_id) rows, with a
+    null turn_idx sorting first as in the struct sort."""
+    order = pc.sort_indices(
+        mentions,
+        sort_keys=[
+            (c, "ascending")
+            for c in ("conv_id", "mention_type", "turn_idx", "pos", "surface")
+        ],
+        null_placement="at_start",
+    )
+    groups = (
+        pa.Table.from_batches([mentions.take(order)])
+        .group_by(["conv_id", "mention_type"], use_threads=False)
+        .aggregate([("surface", "list")])
+    )
+    conv = groups.column("conv_id")
+    return pa.table(
+        {
+            "subj": conv,
+            "pred": groups.column("mention_type"),
+            "obj": pc.binary_join(groups.column("surface_list"), " "),
+            "conv_id": conv,
+        }
     )
 
 

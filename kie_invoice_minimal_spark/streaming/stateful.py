@@ -20,12 +20,16 @@ from __future__ import annotations
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.mention_detect import _classify_batch
+from ..operators.mention_detect import detect_batch
 
+TURNS_ARROW_SCHEMA = pa.schema(
+    [("conv_id", pa.string()), ("turn_idx", pa.int32()), ("text", pa.string())]
+)
 STATE_SCHEMA = "n_turns bigint, n_mentions bigint, max_turn bigint"
 OUTPUT_SCHEMA = (
     "conv_id string, n_turns bigint, n_mentions bigint, max_turn bigint"
@@ -44,8 +48,10 @@ def _update(
         n_turns += len(pdf)
         if len(pdf):
             max_turn = max(max_turn, int(pdf["turn_idx"].max()))
-            mentions = _classify_batch(pdf[["conv_id", "turn_idx", "text"]])
-            n_mentions += len(mentions)
+            turns = pa.RecordBatch.from_pandas(
+                pdf, schema=TURNS_ARROW_SCHEMA, preserve_index=False
+            )
+            n_mentions += detect_batch(turns).num_rows
     state.update((n_turns, n_mentions, max_turn))
     yield pd.DataFrame(
         {

@@ -30,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from kie_invoice_minimal_spark.plans.entity_linking import alias_triples, link_entities  # noqa: E402
 from kie_invoice_minimal_spark.operators.mention_detect import detect_mentions_arrow, detect_mentions_native  # noqa: E402
 from kie_invoice_minimal_spark.operators.triples import materialize_triples, write_triples  # noqa: E402
+from kie_invoice_minimal_spark.plans.pipeline import extract_triples_df  # noqa: E402
 from kie_invoice_minimal_spark.session import get_spark  # noqa: E402
 from kie_invoice_minimal_spark.sources.transcripts import synth_transcripts  # noqa: E402
 
@@ -67,8 +68,6 @@ def main() -> None:
     else:
         ap.error("need --input or --synth")
 
-    detect = detect_mentions_arrow if args.engine == "arrow" else detect_mentions_native
-
     if args.checkpoint_root:
         from kie_invoice_minimal_spark.sources.checkpoints import kg_pipeline
 
@@ -98,17 +97,20 @@ def main() -> None:
         # measures steady-state throughput (what a long-running cluster job
         # sees), not first-job setup.
         warm = synth_transcripts(spark, 20_000, partitions=args.partitions)
-        materialize_triples(detect(warm)).write.format("noop").mode("overwrite").save()
+        extract_triples_df(warm, args.engine).write.format("noop").mode("overwrite").save()
 
-    mentions = detect(transcripts)
-    triples = materialize_triples(mentions)
     if args.link_entities:
+        detect = detect_mentions_arrow if args.engine == "arrow" else detect_mentions_native
+        mentions = detect(transcripts)
+        triples = materialize_triples(mentions)
         emap = link_entities(mentions)
         triples = triples.unionByName(
             alias_triples(emap).selectExpr(
                 "subj", "pred", "obj", "cast(null as string) as conv_id"
             )
         )
+    else:
+        triples = extract_triples_df(transcripts, args.engine)
 
     walls = []
     n_triples = -1

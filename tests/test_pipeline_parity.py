@@ -106,3 +106,66 @@ def test_golden_file_triples(spark):
         for r in extract_triples_df(synth_transcripts(spark, 100)).collect()
     }
     assert got == golden
+
+
+def test_flagship_invariant_to_partitions_and_batch_size(spark):
+    """The Arrow flagship folds whole conversations per batch, so its output
+    must not depend on how the exchange and the Arrow batches cut the input.
+    It equals the native detector + groupBy fold over every
+    shuffle-partition count x Arrow batch size, on input with a conversation
+    longer than every batch, turns given out of order, and null conv_id,
+    text and turn_idx."""
+    from collections import Counter
+
+    from kie_invoice_minimal_spark.operators.mention_detect import detect_mentions_native
+    from kie_invoice_minimal_spark.operators.triples import materialize_triples
+
+    # "~long" sorts after every synthetic conv_id, so with one shuffle
+    # partition its turns cover row 10000 and cross the batch boundary at
+    # both batch sizes
+    n_long = 1500
+    long_turns = [
+        ("~long", (i * 7919) % n_long, f"VinaMilk NSX: {1 + i % 12}/2023 nang {i}g")
+        for i in range(n_long)
+    ]
+    odd = [
+        (None, 0, "VinaMilk 500g"),
+        (None, 1, "Nestlé HSD 2/12/2025"),
+        ("c-null-text", 0, None),
+        ("c-null-text", 1, "VinaMilk Sữa-Tươi"),
+        ("c-null-turn", None, "VinaMilk HSD 2/12/2025"),
+        ("c-null-turn", 0, "Nestlé VinaMilk"),
+        ("c-null-turn", None, "Sữa-Tươi Nestlé"),
+    ]
+    extra = spark.createDataFrame(
+        long_turns + odd, "conv_id string, turn_idx int, text string"
+    )
+    t = (
+        synth_transcripts(spark, 9000)
+        .select("conv_id", "turn_idx", "text")
+        .unionByName(extra)
+        .persist()
+    )
+    want = Counter(map(tuple, materialize_triples(detect_mentions_native(t)).collect()))
+    assert any(subj is None for subj, *_ in want)
+    assert ("~long", "BRAND", " ".join(["VinaMilk"] * n_long), "~long") in want
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.execution.arrow.maxRecordsPerBatch",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+    )
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        # no coalescing: the partition count under test is the one that runs
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        for parts in (1, 7, 32):
+            for batch in (257, 10000):
+                spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+                spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch))
+                got = Counter(map(tuple, extract_triples_df(t, "arrow").collect()))
+                assert got == want, (parts, batch)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+        t.unpersist()

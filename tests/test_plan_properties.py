@@ -2,7 +2,8 @@
 
 - No row-at-a-time Python (BatchEvalPython) anywhere in any registered
   query's plan — the north rule's "no per-row Python".
-- The flagship native extraction keeps its single-exchange shape.
+- The flagship native extraction keeps its single-exchange shape, and the
+  Arrow flagship is one exchange plus one Arrow pass.
 - Scans prune columns: the mention path never reads the documents table's
   text-unrelated payload columns.
 """
@@ -67,6 +68,18 @@ def test_flagship_native_single_exchange(spark):
         f"flagship should have exactly one data shuffle (+ optional "
         f"adaptive spread), saw {n_ex} exchanges ({n_spread} round-robin)"
     )
+
+
+def test_flagship_arrow_one_exchange_one_arrow_pass(spark):
+    """kg_triples is one hash exchange on conv_id plus one MapInArrow that
+    detects and folds: no pandas crossing and no JVM object aggregation
+    (collect_list)."""
+    plan = _plan(entrymod.queries()["kg_triples"](spark, SF))
+    hash_keys = re.findall(r"Arguments: hashpartitioning\(([^)]*)\)", plan)
+    assert len(hash_keys) == 1 and re.match(r"conv_id#\d+, \d+$", hash_keys[0]), hash_keys
+    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 1, plan
+    for op in ("MapInPandas", "ObjectHashAggregate"):
+        assert op not in plan, f"kg_triples plan has {op}:\n{plan}"
 
 
 def test_mention_scan_prunes_columns(spark):

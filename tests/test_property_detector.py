@@ -7,10 +7,10 @@ from __future__ import annotations
 from hypothesis import given, settings, strategies as st
 
 from kie_invoice_minimal_spark.functions.rules import classify_token
-from kie_invoice_minimal_spark.operators.mention_detect import _classify_batch
+from kie_invoice_minimal_spark.operators.mention_detect import detect_batch
 from kie_invoice_minimal_spark.oracle import detect_mentions
 
-import pandas as pd
+import pyarrow as pa
 
 TOKENS = st.sampled_from(
     [
@@ -26,21 +26,16 @@ TEXTS = st.lists(TOKENS, min_size=0, max_size=12).map(" ".join)
 @settings(max_examples=60, deadline=None)
 @given(st.lists(TEXTS, min_size=1, max_size=8))
 def test_batch_classifier_matches_oracle(texts):
-    pdf = pd.DataFrame(
+    turns = pa.RecordBatch.from_pydict(
         {
             "conv_id": [f"c{i}" for i in range(len(texts))],
-            "turn_idx": list(range(len(texts))),
+            "turn_idx": pa.array(range(len(texts)), pa.int32()),
             "text": texts,
         }
     )
-    got = sorted(
-        map(
-            tuple,
-            _classify_batch(pdf)[
-                ["conv_id", "turn_idx", "pos", "span_start", "span_end", "surface", "mention_type"]
-            ].itertuples(index=False),
-        )
-    )
+    m = detect_batch(turns).to_pydict()
+    cols = ["conv_id", "turn_idx", "pos", "span_start", "span_end", "surface", "mention_type"]
+    got = sorted(zip(*(m[c] for c in cols)))
     want = sorted(
         (m.conv_id, m.turn_idx, m.pos, m.span_start, m.span_end, m.surface, m.mention_type)
         for i, t in enumerate(texts)
